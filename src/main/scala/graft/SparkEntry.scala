@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.dedup.Dedup
 import graft.encoders.PassthroughEncoder
 import graft.search.{SearcherModel, SparkSearcher, SearcherParams}
+import graft.search.FittedIndex.{Flat, Ivf, Lsh, Opq, Pq, Refined, Sq}
 import graft.text.TextAnalysis
 import graft.whitening.VecsWhitening
 
@@ -3735,7 +3736,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = measurement, indexParam = indexParam))
       .fit(table(s, dir, "embeddings"))
-    val cbs = model.fittedCodebooks.get
+    val Flat(Pq(cbs, _)) = model.fitted
     model.unpersist()
     val dsub = cbs(0)(0).length
     // cos fits/queries over MATERIALIZED-normalized floats; l1 over raw
@@ -3763,8 +3764,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "OPQ8,PQ8"))
       .fit(table(s, dir, "embeddings"))
-    val cbs = model.fittedCodebooks.get
-    val rot = model.fittedOpqRotation.get
+    val Opq(rot, Pq(cbs, _)) = model.fitted
     model.unpersist()
     val dsub = cbs(0)(0).length
     val d = rot.length
@@ -3795,7 +3795,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "PQ8,RFlat"))
       .fit(table(s, dir, "embeddings"))
-    val cbs = model.fittedCodebooks.get
+    val Refined(Flat(Pq(cbs, _))) = model.fitted
     val n = model.count
     model.unpersist()
     val dsub = cbs(0)(0).length
@@ -3822,8 +3822,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "IVF16,PQ8", nprobe = 6))
       .fit(table(s, dir, "embeddings"))
-    val cbs = model.fittedCodebooks.get
-    val cents = model.fittedCentroids.get
+    val Ivf(cents, Pq(cbs, _)) = model.fitted
     model.unpersist()
     val dsub = cbs(0)(0).length
     s"""WITH cb(s, c, cent) AS (VALUES ${cbValues(cbs)}),
@@ -3926,7 +3925,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "SQ8"))
       .fit(table(s, dir, "embeddings"))
-    val (vmin, vdiff) = model.fittedSqBounds.get
+    val Flat(Sq(vmin, vdiff, _)) = model.fitted
     val dim = vmin.length
     model.unpersist()
     s"""WITH b(vmin, vdiff) AS (VALUES (${fArr(vmin)}, ${fArr(vdiff)})),
@@ -3949,7 +3948,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "SQ4"))
       .fit(table(s, dir, "embeddings"))
-    val (vmin, vdiff) = model.fittedSqBounds.get
+    val Flat(Sq(vmin, vdiff, _)) = model.fitted
     val dim = vmin.length
     model.unpersist()
     s"""WITH b(vmin, vdiff) AS (VALUES (${fArr(vmin)}, ${fArr(vdiff)})),
@@ -3978,8 +3977,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "IVF16,SQ8", nprobe = 6))
       .fit(table(s, dir, "embeddings"))
-    val (vmin, vdiff) = model.fittedSqBounds.get
-    val cents = model.fittedCentroids.get
+    val Ivf(cents, Sq(vmin, vdiff, _)) = model.fitted
     val dim = vmin.length
     model.unpersist()
     s"""WITH b(vmin, vdiff) AS (VALUES (${fArr(vmin)}, ${fArr(vdiff)})),
@@ -4013,7 +4011,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = indexParam, nprobe = nprobe))
       .fit(table(s, dir, "embeddings"))
-    val cents = model.fittedCentroids.get
+    val Ivf(cents, _) = model.fitted
     model.unpersist()
     // the SAME resolution the search path applies (nprobe=0 = auto): the
     // embedded probe count can never diverge from the gate's run
@@ -4047,7 +4045,7 @@ object SparkEntry {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = spelling, lshBatchHint = batchHint))
       .fit(table(s, dir, "embeddings"))
-    val planes = model.fittedLshPlanes.get
+    val Lsh(planes) = model.fitted
     model.unpersist()
     // r18 auto-reroute: a JOINT-auto config the serve cost model prices
     // ≥ the exact scan is REFUSED at serve (SearcherModel.lshServeExact)

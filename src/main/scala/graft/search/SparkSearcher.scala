@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.encoders.{Encoder, PassthroughEncoder}
@@ -412,6 +412,19 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     s
   }
 
+  /** norm_vec (faiss_searcher.py:53, 70): the cosine kernel normalizes
+    * internally, so vectors are materialized-normalized only for a non-cos
+    * metric (e.g. ip-on-normalized ≡ cos, the reference's trick). */
+  private[search] val normVecFirst: Boolean = params.normVec && params.measurement != "cos"
+
+  /** Codes-only families score a raw asymmetric dot over codes (no
+    * full-vector cosine kernel exists once the floats are dropped), so cos
+    * needs rows AND queries MATERIALIZED-normalized — the reference's own
+    * norm_vec trick (faiss_searcher.py:53) — after any PCA projection;
+    * bounds, levels and codebooks then live in the normalized space. */
+  private[search] val codesCos: Boolean =
+    IndexStrategy.codesOnly(strategy) && params.measurement == "cos"
+
   /** nprobe the IVF search paths use — the caller's knob, untouched.
     * (Rounds ≤4 served HNSW requests by IVF(64) pruning with a floored
     * nprobe; HNSW is now a real partition-local graph ANN, [[NswGraph]],
@@ -430,14 +443,15 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     val itemCol = params.itemCol.getOrElse(items.columns.head)
     require(items.columns.contains(itemCol), s"item column '$itemCol' missing")
 
-    val encoded0 = encoder.encode(items, itemCol, VEC)
-    // norm_vec (faiss_searcher.py:53, 70): cosine kernel normalizes
-    // internally, so only materialize normalized vectors when asked for a
-    // non-cos metric (e.g. ip-on-normalized ≡ cos, the reference's trick).
-    val encoded =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-      else encoded0
+    // OPQ serves only metrics a rotation preserves: refuse before any job
+    IndexStrategy.effective(strategy) match {
+      case OpqPq(m) =>
+        require(Set("cos", "ip", "dot", "l2").contains(params.measurement),
+          s"OPQ serves rotation-invariant metrics (cos/ip/l2); " +
+            s"'${params.measurement}' is not preserved by a rotation — use PQ$m")
+      case _ => ()
+    }
+    val encoded = normalizedIf(encoder.encode(items, itemCol, VEC), VEC, normVecFirst)
     // PCA prefix: fit the projection on exactly what the inner index
     // would otherwise see, then train the index in the reduced space
     // (queries ride the same fitted kernel — search/searchRange). The
@@ -481,12 +495,7 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     val base = withId.select((col(ROW_ID) +: col(itemCol).as(ITEM) +: col(VEC) +:
       payloadCols.map(col).toSeq): _*)
 
-    // a Refined wrapper fits exactly like its inner strategy but KEEPS the
-    // float vectors next to the codes (faiss IndexRefineFlat stores both):
-    // memory = floats + codes, search = cheap code scan + exact re-rank
-    val keepVec = strategy match { case Refined(_) => true; case _ => false }
-    def dropVecUnlessKept(df: DataFrame): DataFrame =
-      if (keepVec) df else df.drop(VEC)
+    val pre0 = normalizedIf(base, VEC, codesCos)
     // Serve-parallelism floor (scale-adaptive, r21): the persisted index
     // inherits the SCAN's partitioning, and a small parquet input is 1-3
     // splits — every subsequent serve scan (exact/PQ/SQ/LSH-verify kernels
@@ -497,196 +506,80 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     // and results are partition-independent (TopKByDistance tie-breaks on
     // (dist, row_id)), so outputs are identical. At cluster scale the
     // input has >= parallelism partitions and this is a no-op — no extra
-    // exchange is ever paid on a big corpus. HNSW/IVF branches are
-    // excluded: their build co-locates rows (graph adjacency / cell id)
-    // and already spreads via its own grouped shuffle.
+    // exchange is ever paid on a big corpus. Co-located layouts (HNSW
+    // graph adjacency, IVF cell id) are excluded: their encode already
+    // spreads via its own grouped shuffle.
     def spreadForServe(df: DataFrame): DataFrame =
       graft.util.Parallelism.scanFloor(df, ROW_ID)
-    val fitted = IndexStrategy.effective(strategy) match {
-      case Refined(_) => throw new IllegalStateException("nested refine")
-      case ExactFlat =>
-        val indexed = spreadForServe(base).persist(StorageLevel.MEMORY_AND_DISK)
+    val (fitted, indexed, n, d) =
+      if (strategy == ExactFlat) {
+        // nothing to train: the spread corpus IS the index, cached once
+        val indexed = spreadForServe(pre0).persist(StorageLevel.MEMORY_AND_DISK)
         val n = indexed.count() // materialize, like index.add (faiss_searcher.py:124)
-        val d = dimOf(indexed)
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None, None)
-      case IvfFlat(nlist) =>
-        val pre = base.persist(StorageLevel.MEMORY_AND_DISK)
+        (FittedIndex.Flat(FittedIndex.Floats), indexed, n, dimOf(indexed))
+      } else {
+        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
         val n = pre.count()
-        val cents = IvfIndex.fitCentroids(pre, VEC,
-          IndexStrategy.resolveNlist(nlist, n), n)
-        // store each row's cell and co-partition by it, so query-time probes
-        // scan only their nprobe cells (partition pruning at cluster scale)
-        val indexed = IvfIndex
-          .assignCells(pre, VEC, cents, base.sparkSession.sparkContext.defaultParallelism)
+        val d = dimOf(pre)
+        val fitted = train(strategy, pre, n, d)
+        // the trained quantizers encode the corpus exactly as add() encodes
+        // later rows
+        val rows = fitted.encode(pre, this, graphOffset = 0)
+        val indexed = (if (fitted.layoutCol.isEmpty) spreadForServe(rows) else rows)
           .persist(StorageLevel.MEMORY_AND_DISK)
         indexed.count()
         pre.unpersist()
-        val d = dimOf(indexed)
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, Some(cents), None, None)
+        (fitted, indexed, n, d)
+      }
+    // the index is materialized — the PCA moments cache has served its purpose
+    pcaCache.foreach(_.unpersist(blocking = false))
+    new SearcherModel(this, indexed, payloadCols.toSeq, n, d,
+      pcaFit.fold(fitted)(FittedIndex.PreTransform(_, fitted)))
+  }
+
+  /** Train the quantizers `s` needs on the prepared, cached corpus `pre`
+    * (`n` rows of width `d`). A refine wrapper trains exactly like its
+    * inner index; the kept floats are an encode-time decision. */
+  private def train(s: IndexStrategy, pre: DataFrame, n: Long, d: Int): FittedIndex = {
+    import FittedIndex.{Codec, Flat, Floats, Half, Hnsw, Ivf, Lsh, Opq, Pq, Sq, defaultGraphs}
+    def nonEmpty(family: String): Unit =
+      require(d > 0, s"$family fit on empty/zero-dim vectors")
+    def cells(nlist: Int) =
+      IvfIndex.fitCentroids(pre, VEC, IndexStrategy.resolveNlist(nlist, n), n)
+    def pq(m: Int, nbits: Int) = Pq(PqIndex.fitCodebooks(pre, VEC, m, d, n, nbits), nbits)
+    // SQfp16 is train-free (no bounds, no levels); SQ8/SQ4 fit per-dim
+    // bounds once, shared by encode and the synthetic ADC level codebooks
+    def sq(nbits: Int): Codec =
+      if (nbits == 16) Half
+      else { val (vmin, vdiff) = SqIndex.fitBounds(pre, VEC, d); Sq(vmin, vdiff, nbits) }
+    s match {
+      case ExactFlat => Flat(Floats)
+      // cells for pruning (each row stores its cell and is co-partitioned
+      // by it, so query-time probes scan only their nprobe cells), under
+      // any code format: IVFn,PQm is the canonical faiss composition
+      case IvfFlat(nlist) => Ivf(cells(nlist), Floats)
+      case IvfPq(nlist, m, nbits) => nonEmpty("IVF,PQ"); Ivf(cells(nlist), pq(m, nbits))
+      case IvfSq(nlist, nbits) => nonEmpty("IVF,SQ"); Ivf(cells(nlist), sq(nbits))
+      // every metric has a subspace ADC decomposition (PqIndex.adcScorer);
+      // byte codes replace the floats: dim·4·8/(m·nbits)× less memory
+      case PqFlat(m, nbits) => nonEmpty("PQ"); Flat(pq(m, nbits))
+      case SqFlat(nbits) => nonEmpty("SQ"); Flat(sq(nbits))
       case OpqPq(m) =>
-        // OPQ pre-rotation (faiss "OPQm,PQm"): rotate into the fitted
-        // eigen-balanced basis, then ordinary PQ over the rotated floats.
-        // Rotation preserves dot/l2 exactly, so only those metrics qualify
-        require(Set("cos", "ip", "dot", "l2").contains(params.measurement),
-          s"OPQ serves rotation-invariant metrics (cos/ip/l2); " +
-            s"'${params.measurement}' is not preserved by a rotation — use PQ$m")
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "OPQ fit on empty/zero-dim vectors")
+        nonEmpty("OPQ")
+        // rotate into the fitted eigen-balanced basis, then ordinary PQ
+        // over the rotated floats (the rotation is applied inside the
+        // codebook sample's projection: nothing rotated is cached)
         val rot = OpqIndex.fitRotation(pre, VEC, d, m)
-        // rotated copy under its own name: codes come from rotated space,
-        // while a refine wrapper keeps the UNROTATED (normalized) vectors —
-        // exact re-rank must score in the query's own space. Plain OPQ
-        // drops VEC BEFORE this persist: only one corpus-sized float
-        // column is ever cached (two only when refine keeps the floats)
-        val rotated = pre.withColumn(VROT, OpqIndex.rotateCol(col(VEC), rot))
-          .transform(dropVecUnlessKept)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        rotated.count()
-        pre.unpersist()
-        val codebooks = PqIndex.fitCodebooks(rotated, VROT, m, d, n)
-        val indexed = spreadForServe(rotated
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VROT), codebooks))
-          .drop(VROT)
-          .transform(dropVecUnlessKept))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        rotated.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          Some(codebooks), None, Some(rot))
-      case PqFlat(m, nbits) =>
-        // every metric has a subspace ADC decomposition (PqIndex.adcScorer);
-        // cos needs MATERIALIZED normalization (ADC computes raw dot
-        // tables; there is no full-vector cosine kernel over codes) — the
-        // reference's own norm_vec trick (faiss_searcher.py:53)
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "PQ fit on empty/zero-dim vectors")
-        val codebooks = PqIndex.fitCodebooks(pre, VEC, m, d, n, nbits)
-        // store BYTE codes (x4: two codes nibble-packed per byte), drop
-        // the float vectors: dim·4·8/(m·nbits)× less memory — the
-        // property that lets a 100 TB corpus stay cached
-        val indexed = spreadForServe(pre
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), codebooks, nbits))
-          .transform(dropVecUnlessKept))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          Some(codebooks))
-      case IvfPq(nlist, m, nbits) =>
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "IVF,PQ fit on empty/zero-dim vectors")
-        val cents = IvfIndex.fitCentroids(pre, VEC,
-          IndexStrategy.resolveNlist(nlist, n), n)
-        val codebooks = PqIndex.fitCodebooks(pre, VEC, m, d, n, nbits)
-        // cells for pruning AND byte codes for memory: the canonical
-        // faiss IVFn,PQm composition
-        val indexed = IvfIndex
-          .assignCells(pre, VEC, cents, base.sparkSession.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), codebooks, nbits))
-          .transform(dropVecUnlessKept)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, Some(cents),
-          None, Some(codebooks))
-      case SqFlat(nbits) =>
-        // like PQ, cos needs MATERIALIZED normalization (asymmetric dot
-        // over codes); bounds/levels then live in the normalized space
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "SQ fit on empty/zero-dim vectors")
-        // SQfp16 is train-free (no bounds, no levels — 2·dim bytes per
-        // vector, decoded inside the scoring projection at search); SQ8/
-        // SQ4 fit per-dim bounds once, shared by encode and the synthetic
-        // ADC level codebooks (dim bytes / ⌈dim/2⌉ bytes per vector)
-        val fitted = if (nbits == 16) None else Some(SqIndex.fitBounds(pre, VEC, d))
-        val codes = fitted match {
-          case Some((vmin, vdiff)) => SqIndex.encodeCol(col(VEC), vmin, vdiff, nbits)
-          case None                => Fp16.encodeCol(col(VEC))
-        }
-        val indexed = spreadForServe(pre
-          .withColumn(PqIndex.CODES, codes)
-          .transform(dropVecUnlessKept))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          fitted.map { case (mn, df) => SqIndex.levels(mn, df, nbits) }, fitted)
-      case IvfSq(nlist, nbits) =>
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "IVF,SQ fit on empty/zero-dim vectors")
-        val cents = IvfIndex.fitCentroids(pre, VEC,
-          IndexStrategy.resolveNlist(nlist, n), n)
-        // fp16 composition (IVFn,SQfp16): cells for pruning + train-free
-        // half codes, decoded in the scoring projection at search
-        val fitted = if (nbits == 16) None else Some(SqIndex.fitBounds(pre, VEC, d))
-        val codes = fitted match {
-          case Some((vmin, vdiff)) => SqIndex.encodeCol(col(VEC), vmin, vdiff, nbits)
-          case None                => Fp16.encodeCol(col(VEC))
-        }
-        val indexed = IvfIndex
-          .assignCells(pre, VEC, cents, base.sparkSession.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, codes)
-          .transform(dropVecUnlessKept)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, Some(cents),
-          None, fitted.map { case (mn, df) => SqIndex.levels(mn, df, nbits) }, fitted)
+        Opq(rot, Pq(PqIndex.fitCodebooks(
+          pre.withColumn(VROT, OpqIndex.rotateCol(col(VEC), rot)), VROT, m, d, n), 8))
       case HnswGraph(m) =>
-        val pre = base.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "HNSW fit on empty/zero-dim vectors")
-        // one NSW graph per parallelism slot by default: graph size stays
-        // corpus/parallelism (bounded per executor), search fans out flat
-        val numGraphs = math.max(1, if (params.hnswGraphs > 0) params.hnswGraphs
-          else base.sparkSession.sparkContext.defaultParallelism)
-        val indexed = NswGraph.buildGraphs(pre, VEC, ROW_ID, m,
-            SparkSearcher.resolveEfConstruction(params.efConstruction, m), numGraphs,
-            params.measurement, params.metricArg)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        // the FITTED layout (r20): persisted with the model so compact()'s
+        nonEmpty("HNSW")
+        // the FITTED layout (r20), persisted with the model so compact()'s
         // rebuild target survives save/load onto a cluster whose
         // parallelism differs from the one that fitted the graphs
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          None, fittedGraphs = Some(numGraphs))
+        Hnsw(m, Some(defaultGraphs(params, pre.sparkSession)))
       case LshTables(numTables0, bitsOpt) =>
-        val pre = base.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "LSH fit on empty/zero-dim vectors")
+        nonEmpty("LSH")
         // `LSH0` / bare `LSH` (joint auto): bits AND tables from the
         // closed-form recall model at a deterministic corpus-sampled
         // anchor cosine — target 0.9 estimated recall at the anchor so
@@ -751,20 +644,11 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
               f"(LSH$need%dx$bits%d clears 0.9) or lower bits; RFlat cannot " +
               "recover pruned candidates (see RECALL.md)")
         }
-        val planes = SignLsh.planes(numTables, bits, d)
-        // store each row's per-table bucket keys; search is an equi-join on
-        // (table, bucket) — candidates only, never the full corpus
-        val indexed = spreadForServe(pre
-          .withColumn(BUCKETS, SignLsh.bucketsCol(col(VEC), planes)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, Some(planes), None)
+        // each row stores its per-table bucket keys; search is an equi-join
+        // on (table, bucket) — candidates only, never the full corpus
+        Lsh(SignLsh.planes(numTables, bits, d))
+      case Refined(inner) => FittedIndex.Refined(train(inner, pre, n, d))
     }
-    // every branch materialized its own persist (indexed.count) — the
-    // PCA moments cache has served its purpose
-    pcaCache.foreach(_.unpersist(blocking = false))
-    pcaFit.fold(fitted)(fitted.withPca)
   }
 
   /** Score one item against a list (reference `cal_sim`,
@@ -1009,8 +893,10 @@ object SparkSearcher {
   }
 
   /** The single params row Spark's JSON writer produced (a directory of
-    * part files holding one JSON line), read driver-side through the
-    * path's FileSystem — works on any scheme, costs zero Spark jobs. */
+    * part files holding one JSON line, or one plain file from an older
+    * writer), read driver-side through the path's FileSystem — works on
+    * any scheme, costs zero Spark jobs. Anything but exactly one non-empty
+    * row is a corrupt save and fails by name. */
   private def readParamsJson(spark: SparkSession,
       path: String): com.fasterxml.jackson.databind.JsonNode = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -1026,7 +912,9 @@ object SparkSearcher {
         .map(_.trim).filter(_.nonEmpty).toList
       finally in.close()
     }
-    require(rows.nonEmpty, s"index load: $path holds no params row")
+    if (rows.length != 1) throw new IllegalArgumentException(
+      s"index load: $path must hold exactly one params row, found ${rows.length} " +
+        "(a partial or interleaved save leaves none or several)")
     mapper.readTree(rows.head)
   }
 
@@ -1085,13 +973,14 @@ object SparkSearcher {
         if (has("autoCompactAtSegmentRatio"))
           kv.get("autoCompactAtSegmentRatio").asDouble()
         else dflt.autoCompactAtSegmentRatio)
+    // construct first: the searcher strips any PCA prefix off indexParam,
+    // so the fitted state below is read for the inner index
+    val searcher = new SparkSearcher(encoder, params)
     // fitted graph layout (r20): 0/missing = non-HNSW or a pre-r20 save —
     // compact()/add() then fall back to the old params/parallelism
     // heuristic those artifacts were operated under
-    val fittedG = lngOr("fittedGraphs", 0L).toInt
-    // construct first: the searcher strips any PCA prefix off indexParam,
-    // so every strategy dispatch below sees the inner index
-    val searcher = new SparkSearcher(encoder, params)
+    val fitted = FittedIndex.load(spark, path, searcher,
+      Some(lngOr("fittedGraphs", 0L).toInt).filter(_ > 0))
     // explicit read schema when the save recorded one (r22): parquet
     // schema inference over a just-written directory runs a footer-
     // reading Spark job per read — pure fixed cost when the writer
@@ -1103,135 +992,22 @@ object SparkSearcher {
             .fromJson(kv.get("itemsSchema").asText()).asInstanceOf[StructType])
           .parquet(s"$path/items")
       else spark.read.parquet(s"$path/items")
-    // HNSW graphs must be CO-LOCATED (a graph's adjacency is resolved
-    // within its task); parquet splits don't respect graph boundaries, so
-    // re-group by graph id once at load — the at-rest layout (partitioned
-    // by gpart) makes this a directory-aligned shuffle
-    // dispatch on the EFFECTIVE strategy (r22, like fit does): a
-    // Refined(IvfPq)/Refined(IvfSq) must hit the IVF exclusion arm or the
-    // row_id spread scatters the at-rest cell co-location the IVF save
-    // deliberately preserves. HnswGraph stays a raw match — Refined(HNSW)
-    // is forbidden by parse, so raw and effective agree there.
-    val read = searcher.strategy match {
-      case HnswGraph(_) => read0.repartition(col(NswGraph.GPART))
-      case st => IndexStrategy.effective(st) match {
-        // IVF keeps the at-rest cell clustering; everything else gets the
-        // same serve-parallelism floor as fit() — a small saved index is
-        // 1-3 parquet splits, which would pin every serve scan to 1-3
-        // tasks (no-op when the scan already has >= parallelism splits)
-        case IvfFlat(_) | IvfPq(_, _, _) | IvfSq(_, _) => read0
-        case _ => graft.util.Parallelism.scanFloor(read0, ROW_ID)
-      }
-    }
-    val indexed = read.persist(StorageLevel.MEMORY_AND_DISK)
+    val indexed = fitted.relayout(read0).persist(StorageLevel.MEMORY_AND_DISK)
     val n = indexed.count()
     require(n == lng("count"),
       s"index load: ntotal $n != stored ${lng("count")} (faiss_searcher.py:112)")
-    // Metadata reads (r22 shape): DRIVER-sorted collects over EXPLICIT
-    // static schemas. These tables are a few hundred tiny rows; the old
-    // `.orderBy(...).collect()` paid a range-partitioner boundary-sampling
-    // job AND a parquet footer-inference job on top of the collect — per
-    // metadata table, per load, pure fixed cost. The schemas are the
-    // writer's own (save() builds these frames inline); the deterministic
-    // order the arrays need is re-established on the driver for free.
-    def meta(sub: String, schema: StructType): Array[Row] =
-      spark.read.schema(schema).parquet(s"$path/$sub").collect()
-    val floatArr = ArrayType(FloatType)
-    val pq = IndexStrategy.effective(searcher.strategy) match {
-      case PqFlat(_, _) | IvfPq(_, _, _) | OpqPq(_) =>
-        val rows = meta("pq_codebooks", StructType(Seq(
-          StructField("sub", IntegerType), StructField("cid", IntegerType),
-          StructField("centroid", floatArr))))
-        Some(rows.groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
-          .map { case (_, rs) =>
-            rs.sortBy(_.getAs[Int]("cid"))
-              .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-          }.toArray)
-      case _ => None
-    }
-    val sqB = IndexStrategy.effective(searcher.strategy) match {
-      case SqFlat(16) | IvfSq(_, 16) => None // fp16: nothing was fitted
-      case SqFlat(_) | IvfSq(_, _) =>
-        val rows = meta("sq_bounds", StructType(Seq(
-          StructField("i", IntegerType), StructField("vmin", FloatType),
-          StructField("vdiff", FloatType))))
-          .sortBy(_.getAs[Int]("i"))
-        Some((rows.map(_.getAs[Float]("vmin")), rows.map(_.getAs[Float]("vdiff"))))
-      case _ => None
-    }
-    // the scoring "codebooks": PQ's fitted ones, or SQ's levels rebuilt
-    // from the persisted bounds at the saved quantizer width
-    val sqNbits = IndexStrategy.effective(searcher.strategy) match {
-      case SqFlat(nb) => nb
-      case IvfSq(_, nb) => nb
-      case _ => 8
-    }
-    val cbooks = pq.orElse(sqB.map { case (mn, df) => SqIndex.levels(mn, df, sqNbits) })
-    val centroids = IndexStrategy.effective(searcher.strategy) match {
-      case IvfFlat(_) | IvfPq(_, _, _) | IvfSq(_, _) =>
-        Some(meta("centroids", StructType(Seq(
-          StructField("centroid_id", IntegerType),
-          StructField("centroid", floatArr))))
-          .sortBy(_.getAs[Int]("centroid_id"))
-          .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray))
-      case _ => None
-    }
-    val planes = searcher.strategy match {
-      case LshTables(_, _) =>
-        val rows = meta("lsh_planes", StructType(Seq(
-          StructField("tbl", IntegerType), StructField("bit", IntegerType),
-          StructField("plane", floatArr))))
-        val grouped = rows.groupBy(_.getAs[Int]("tbl")).toSeq.sortBy(_._1)
-          .map { case (_, rs) =>
-            rs.sortBy(_.getAs[Int]("bit"))
-              .map(_.getAs[scala.collection.Seq[Float]]("plane").toArray)
-          }.toArray
-        Some(grouped)
-      case _ => None
-    }
-    val rot = IndexStrategy.effective(searcher.strategy) match {
-      case OpqPq(_) =>
-        Some(meta("opq_rotation", StructType(Seq(
-          StructField("j", IntegerType), StructField("row", floatArr))))
-          .sortBy(_.getAs[Int]("j"))
-          .map(_.getAs[scala.collection.Seq[Float]]("row").toArray))
-      case _ => None
-    }
-    // dim re-derivation: PQ/SQ store codes only (no __vec) — dim is the
-    // SUM of subspace widths (SQ4 mixes size-2 pairs with a size-1
-    // trailing subspace on odd dims — m·dsub0 would be off). Other
-    // strategies re-derive from whichever FITTED artifact carries the
-    // width (IVF centroids, LSH planes — the same artifact-consistency
-    // invariant class as the codebook path, minus one head() job per
-    // load); only a bare Flat/HNSW index, with no fitted artifact at
-    // all, still reads the width off the first stored vector.
-    val d = cbooks match {
-      case Some(cbs) => cbs.map(_(0).length).sum
-      case None => centroids.map(_(0).length)
-        .orElse(planes.map(_(0)(0).length))
-        .getOrElse(IndexStrategy.effective(searcher.strategy) match {
-          // fp16 stores codes only: dim = half the code bytes
-          case SqFlat(16) | IvfSq(_, 16) =>
-            indexed.select(length(col(PqIndex.CODES))).head().getInt(0) / 2
-          case _ => indexed.select(size(col(VEC))).head().getInt(0)
-        })
-    }
+    // dim re-derivation from whichever FITTED artifact carries the width
+    // (codebooks, SQ bounds, IVF centroids, LSH planes) — an artifact-
+    // consistency check that costs no job; only an index with no such
+    // artifact reads the width off its first stored vector or fp16 code
+    val d = fitted.dimOf(indexed)
     require(d == lng("dim"),
       s"index load: dim $d != stored ${lng("dim")} (faiss_searcher.py:113)")
     val payload = indexed.columns
       .filterNot(Set(ROW_ID, ITEM_SAVED, VEC, IvfIndex.CID, BUCKETS, PqIndex.CODES,
         NswGraph.GPART, NswGraph.NBRS)).toSeq
-    // PCA-prefix kernel: indexParam carries the spelling, so the spec is
-    // already parsed; n_components is re-asserted by the loader
-    val pca = searcher.pcaSpec.map { case (nc, _, _) =>
-      // the R rotation was composed into the saved kernel at fit time —
-      // load sees a plain affine projection either way
-      graft.whitening.VecsWhiteningModel.load(spark, s"$path/pca", Some(nc))
-    }
     val model = new SearcherModel(searcher,
-      indexed.withColumnRenamed(ITEM_SAVED, ITEM), payload, n, d, centroids,
-      planes, cbooks, sqB, rot, pca,
-      fittedGraphs = if (fittedG > 0) Some(fittedG) else None)
+      indexed.withColumnRenamed(ITEM_SAVED, ITEM), payload, n, d, fitted)
     // migration notice (r19, ADVICE): a save without formatVersion
     // predates the joint-auto LSH degenerate reroute — if this load's
     // deterministic route now serves through the exact kernel, the model
@@ -1247,6 +1023,15 @@ object SparkSearcher {
     model
   }
 
+  /** `df` with vector column `c` L2-normalized when `when` holds. */
+  private[search] def normalizedIf(df: DataFrame, c: String, when: Boolean): DataFrame =
+    if (when) df.withColumn(c, VectorFunctions.vec_l2_normalize(col(c))) else df
+
+  /** Attach each hit's source item: `(QID, SourceItem, ROW_ID, DIST, RANK)`. */
+  private[search] def withSource(hits: DataFrame, q: DataFrame): DataFrame =
+    hits.join(broadcast(q.select(col(QID), col(SourceItem))), QID)
+      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
+
   /** Serving-format version stamped into params.json at save. 19 = the
     * joint-auto LSH reroute era; 20 adds the persisted fitted graph
     * layout + build-config fields (all read tolerantly — the version is
@@ -1260,7 +1045,7 @@ object SparkSearcher {
 
 /**
  * A trained searcher: the materialized `(row_id, item, vec, payload…)`
- * table plus (for IVF) the centroid set. Query surface mirrors
+ * table plus the fitted index state. Query surface mirrors
  * faiss_searcher.py:127-208.
  */
 class SearcherModel private[search] (
@@ -1269,20 +1054,12 @@ class SearcherModel private[search] (
     val payloadCols: Seq[String],
     val count: Long,
     val dim: Int,
-    private[search] val centroids: Option[Array[Array[Float]]],
-    private[search] val lshPlanes: Option[Array[Array[Array[Float]]]],
-    private[search] val pqCodebooks: Option[Array[Array[Array[Float]]]],
-    private[search] val sqBounds: Option[(Array[Float], Array[Float])] = None,
-    private[search] val opqRotation: Option[Array[Array[Float]]] = None,
-    private[search] val pcaModel: Option[graft.whitening.VecsWhiteningModel] = None,
-    private[search] val fittedGraphs: Option[Int] = None) {
+    /** The fitted index ([[FittedIndex]]). Its parameters are exposed for
+      * data-dependent oracle building: the correctness gate embeds them as
+      * SQL literals — they are deterministic functions of the fitted table. */
+    val fitted: FittedIndex) {
 
   import SparkSearcher._
-
-  /** Attach the fitted PCA-prefix projection (same shared `indexed`). */
-  private[search] def withPca(p: graft.whitening.VecsWhiteningModel): SearcherModel =
-    new SearcherModel(searcher, indexed, payloadCols, count, dim, centroids,
-      lshPlanes, pqCodebooks, sqBounds, opqRotation, Some(p), fittedGraphs)
 
   // Grow ops CONSUME the receiver (r20, ADVICE): add()/remove()/compact()
   // release the old model's checkpoint-backed blocks once the grown index
@@ -1293,7 +1070,6 @@ class SearcherModel private[search] (
   // that consumed it. Set ONLY on grow-op success (a rejected remove() or
   // a no-op compact() leaves the receiver live).
   @volatile private var consumedBy: String = null
-  private def markConsumed(op: String): Unit = consumedBy = op
   private def requireLive(): Unit =
     if (consumedBy != null) throw new IllegalStateException(
       s"this SearcherModel was consumed by $consumedBy() — grow operations " +
@@ -1301,12 +1077,19 @@ class SearcherModel private[search] (
         "model they RETURNED instead (faiss mutates in place; the Spark " +
         "analog hands you the grown immutable model and retires the old one)")
 
-  /** Project an encoded query column through the fitted PCA prefix, if
-    * one exists — BEFORE any cos/code normalization, mirroring fit. */
-  private def pcaProject(df: DataFrame, c: String): DataFrame =
-    pcaModel.fold(df)(m => df.withColumn(c, m.transformCol(col(c))))
-  private def params = searcher.params
-  private def metric = searcher.metric
+  /** Hand the receiver's index over to `rows` (n rows, same fitted state):
+    * the parent cache and any checkpoint-backed blocks a previous grow op
+    * left (LogicalRDD leaves the plain unpersist cannot release) are
+    * dropped, and the receiver is consumed. */
+  private def regrown(op: String, rows: DataFrame, n: Long): SearcherModel = {
+    indexed.unpersist()
+    graft.util.CacheDiscipline.release(indexed)
+    consumedBy = op
+    new SearcherModel(searcher, rows, payloadCols, n, dim, fitted)
+  }
+
+  private[search] def params = searcher.params
+  private[search] def metric = searcher.metric
   private val spark = indexed.sparkSession
 
   // frames this model persisted on the caller's behalf (the multi-K
@@ -1320,41 +1103,32 @@ class SearcherModel private[search] (
     df
   }
 
-  /** Fitted model parameters, exposed for data-dependent oracle building
-    * (the correctness gate embeds them as SQL literals — they are
-    * deterministic functions of the fitted table). */
-  /** [[SparkSearcher.lshExactCheaper]] of the FITTED planes: true when
-    * serving this LSH config is estimated ≥ an exact scan per query
-    * (degenerate config — e.g. the 64-table feasibility ceiling at a
-    * large-corpus anchor). Decides the [[SearcherParams.lshExactFallback]]
-    * route; logged either way so the boundary is visible in production. */
-  private[search] lazy val lshServeExactCheaper: Boolean = lshPlanes.exists { pl =>
-    pl.nonEmpty && SparkSearcher.lshExactCheaper(pl.length, pl(0).length)
+  /** Should LSH serving route through the exact kernel? Only when the
+    * fitted planes price candidate verify ≥ an exact scan
+    * ([[FittedIndex.Lsh.exactCheaper]] — a degenerate config, e.g. the
+    * 64-table feasibility ceiling at a large-corpus anchor), and then two
+    * ways in: the explicit opt-in flag (any spelling), or — r18 — a
+    * JOINT-AUTO config (`LSH`/`LSH0`, no user-written tables or bits): an
+    * auto config carries no faiss bucket-semantics obligation (nobody
+    * wrote the tables×bits that would be served), so refusing to serve a
+    * config the fit's own cost model prices at ≥ an exact scan is strictly
+    * better — same results or better (recall 1.0) at lower estimated cost.
+    * Explicit `LSHtxb` — and `LSH0xb`, where the user pinned the width —
+    * stay bucket-faithful without the flag, logging the crossover warning.
+    * Deterministic from fitted state, so a loaded model routes identically
+    * to the fit that saved it, and the correctness oracle can re-derive
+    * the decision. */
+  private[search] lazy val lshServeExact: Boolean = fitted.core match {
+    case l: FittedIndex.Lsh => l.exactCheaper &&
+      (params.lshExactFallback || searcher.strategy == LshTables(0, None))
+    case _ => false
   }
-
-  /** Should LSH serving route through the exact kernel? Two ways in:
-    * the explicit opt-in flag (any spelling), or — r18 — a JOINT-AUTO
-    * config (`LSH`/`LSH0`, no user-written tables or bits) that resolved
-    * degenerate: an auto config carries no faiss bucket-semantics
-    * obligation (nobody wrote the tables×bits that would be served), so
-    * refusing to serve a config the fit's own cost model prices at ≥ an
-    * exact scan is strictly better — same results or better (recall 1.0)
-    * at lower estimated cost. Explicit `LSHtxb` — and `LSH0xb`, where
-    * the user pinned the width — stay bucket-faithful without the flag,
-    * logging the crossover warning as before. Deterministic from fitted
-    * state, so a loaded model routes identically to the fit that saved
-    * it, and the correctness oracle can re-derive the decision. */
-  private[search] lazy val lshServeExact: Boolean = lshServeExactCheaper &&
-    (params.lshExactFallback || (searcher.strategy match {
-      case LshTables(0, None) => true
-      case _                  => false
-    }))
 
   /** Fitted graph count — `max(__gpart) + 1` over the cached index (one
     * bounded agg, computed once per model). Derived from the DATA, not
     * re-estimated from parallelism: a loaded index keeps the graph count
     * it was fitted with even when the serving cluster differs. */
-  private lazy val hnswGraphCount: Int = {
+  private[search] lazy val hnswGraphCount: Int = {
     // null-safe: max() over an EMPTY fitted index is null — fall back to
     // one graph instead of an NPE from describe/effectiveEf
     val row = indexed.agg(max(col(NswGraph.GPART))).head()
@@ -1366,7 +1140,7 @@ class SearcherModel private[search] (
     * (the split is immutable for a given SearcherModel: add()/compact()
     * return NEW models), so a dashboard polling describe() runs the count
     * job once, not per call (r21, ADVICE). */
-  private lazy val hnswFittedRows: Long =
+  private[search] lazy val hnswFittedRows: Long =
     indexed.filter(col(NswGraph.GPART) < fittedGraphTarget).count()
 
   /** compact()'s rebuild target and add()'s segment-growth baseline: the
@@ -1378,9 +1152,10 @@ class SearcherModel private[search] (
     * saves lack the field: fall back to the old heuristic (explicit
     * `hnswGraphs`, else this session's parallelism), the behavior those
     * artifacts were operated under. */
-  private def fittedGraphTarget: Int = fittedGraphs.getOrElse(
-    math.max(1, if (params.hnswGraphs > 0) params.hnswGraphs
-      else spark.sparkContext.defaultParallelism))
+  private[search] def fittedGraphTarget: Int = (fitted.core match {
+    case FittedIndex.Hnsw(_, graphs) => graphs
+    case _                           => None
+  }).getOrElse(FittedIndex.defaultGraphs(params, spark))
 
   /** [[SparkSearcher.resolveEf]] over the fitted state (efSearch=0 ⇒
     * beam-fraction auto; explicit values untouched). Lazy: the auto
@@ -1394,23 +1169,6 @@ class SearcherModel private[search] (
     ef
   }
 
-  private def lshRouteLog(routed: Boolean): Unit = {
-    val pl = lshPlanes.get
-    val (t, b) = (pl.length, pl(0).length)
-    val msg = f"LSH$t%dx$b%d: estimated candidate verify " +
-      f"(tables·n/2^bits at ${SparkSearcher.CandidateRowOverhead}%.0f× a " +
-      f"scanned row) ≥ the exact scan — " +
-      (if (routed && params.lshExactFallback)
-        "serving through the exact top-k kernel (lshExactFallback)"
-       else if (routed)
-        "auto config refused for serving; routing through the exact " +
-          "top-k kernel (recall 1.0 — an auto spelling carries no bucket " +
-          "obligation)"
-       else "set lshExactFallback=true to serve through the exact kernel " +
-         "(same or better latency, recall 1.0)")
-    org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").warn(msg)
-  }
-
   /** One-row introspection of the FITTED operating point: every auto
     * the engine resolved, as the values that will actually serve — the
     * faiss "index properties" analog for ops dashboards and config
@@ -1421,54 +1179,17 @@ class SearcherModel private[search] (
     requireLive()
     val sp = spark
     import sp.implicits._
-    val eff = IndexStrategy.effective(searcher.strategy)
-    val nprobeRes = centroids.map(c =>
-      IndexStrategy.resolveNprobe(searcher.effectiveNprobe, c.length))
-    val efRes = eff match {
-      case HnswGraph(_) => Some(effectiveEf)
-      case _            => None
-    }
-    // HNSW serving lifecycle (r20): current vs fitted graph layout and
-    // the compact() recommendation — SAME criterion as add()'s warning
-    // (segment rows exceed the fitted corpus; the r19 2M ladder measured
-    // batch latency ~linear in graph count, and compact() restoring the
-    // fitted latency at recall 1.0), surfaced for ops dashboards so the
-    // merge decision doesn't live only in driver logs
-    val (hnswG, hnswFitted, compactRec) = eff match {
-      case HnswGraph(_) =>
-        val g0 = fittedGraphTarget
-        (Some(hnswGraphCount), Some(g0),
-          Some(hnswGraphCount > g0 && count - hnswFittedRows > hnswFittedRows))
-      case _ => (None, None, None)
-    }
-    val kfRes = searcher.strategy match {
-      case Refined(_) =>
-        Some(SparkSearcher.resolveRefineKFactor(params.refineKFactor, count))
-      case _ => None
-    }
-    val (lshT, lshB) = lshPlanes match {
-      case Some(pl) if pl.nonEmpty => (Some(pl.length), Some(pl(0).length))
-      case _                       => (None, None)
-    }
+    val r = fitted.resolved(this)
     Seq((params.indexParam, searcher.strategy.toString, count, dim,
-        nprobeRes, efRes, kfRes, lshT, lshB,
-        if (lshT.isDefined) Some(lshServeExactCheaper) else None,
-        if (lshT.isDefined) Some(if (lshServeExact) "exact" else "buckets")
-        else None,
-        params.measurement, params.metricArg,
-        hnswG, hnswFitted, compactRec))
+        r.nprobe, r.efSearch, r.refineKFactor, r.lshTables, r.lshBits,
+        r.lshExactCheaper, r.lshRoute, params.measurement, params.metricArg,
+        r.hnswGraphs, r.hnswFittedGraphs, r.compactRecommended))
       .toDF("index_param", "effective_index", "count", "dim",
         "resolved_nprobe", "resolved_ef_search", "resolved_refine_kfactor",
         "lsh_tables", "lsh_bits", "lsh_exact_cheaper", "lsh_route",
         "measurement", "metric_arg",
         "hnsw_graphs", "hnsw_fitted_graphs", "compact_recommended")
   }
-
-  def fittedCodebooks: Option[Array[Array[Array[Float]]]] = pqCodebooks
-  def fittedCentroids: Option[Array[Array[Float]]] = centroids
-  def fittedLshPlanes: Option[Array[Array[Array[Float]]]] = lshPlanes
-  def fittedSqBounds: Option[(Array[Float], Array[Float])] = sqBounds
-  def fittedOpqRotation: Option[Array[Array[Float]]] = opqRotation
 
   /** Truncate at feature separator: `str(x).split(sep)[0]`
     * (faiss_searcher.py:150-156). `substring_index` keeps everything before
@@ -1516,19 +1237,10 @@ class SearcherModel private[search] (
     requireLive()
     val itemCol = params.itemCol.getOrElse(items.columns.head)
     require(items.columns.contains(itemCol), s"item column '$itemCol' missing")
-    val encoded0 = searcher.encoder.encode(items, itemCol, VEC)
-    val pqCos = IndexStrategy.codesOnly(searcher.strategy) && params.measurement == "cos"
     // same pipeline order as fit: normVec normalize → PCA project →
-    // pqCos (materialized) normalize in the projected space
-    val encodedNv =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-      else encoded0
-    val encodedP = pcaProject(encodedNv, VEC)
-    val encoded =
-      if (pqCos)
-        encodedP.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-      else encodedP
+    // codes-cos (materialized) normalize in the projected space
+    val encoded = normalizedIf(
+      toIndexSpace(searcher.encoder.encode(items, itemCol, VEC), VEC), VEC, searcher.codesCos)
     val withId = params.idCol match {
       case Some(c) => encoded.withColumn(ROW_ID, col(c).cast(LongType))
       case None =>
@@ -1545,88 +1257,12 @@ class SearcherModel private[search] (
       s"add: payload columns $newPayload must match the fitted $payloadCols")
     val base = withId.select((col(ROW_ID) +: col(itemCol).as(ITEM) +: col(VEC) +:
       payloadCols.map(col)): _*)
-    val newPart = searcher.strategy match {
-      case ExactFlat => base
-      case IvfFlat(_) =>
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-      case LshTables(_, _) =>
-        base.withColumn(BUCKETS, SignLsh.bucketsCol(col(VEC), lshPlanes.get))
-      case PqFlat(_, nb) =>
-        base.withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-          .drop(VEC)
-      case OpqPq(_) =>
-        base.withColumn(VEC, OpqIndex.rotateCol(col(VEC), opqRotation.get))
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get))
-          .drop(VEC)
-      // refine wrapper: codes under the fitted quantizers + the floats kept
-      case Refined(inner) => inner match {
-        case PqFlat(_, nb) =>
-          base.withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-        case OpqPq(_) =>
-          base.withColumn(PqIndex.CODES, PqIndex.encodeCol(
-            OpqIndex.rotateCol(col(VEC), opqRotation.get), pqCodebooks.get))
-        case SqFlat(16) => // train-free: no bounds to honor
-          base.withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC)))
-        case SqFlat(nb) =>
-          val (mn, df) = sqBounds.get
-          base.withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-        case IvfPq(_, _, nb) =>
-          IvfIndex.assignCells(base, VEC, centroids.get,
-            spark.sparkContext.defaultParallelism)
-            .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-        case IvfSq(_, 16) =>
-          IvfIndex.assignCells(base, VEC, centroids.get,
-            spark.sparkContext.defaultParallelism)
-            .withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC)))
-        case IvfSq(_, nb) =>
-          val (mn, df) = sqBounds.get
-          IvfIndex.assignCells(base, VEC, centroids.get,
-            spark.sparkContext.defaultParallelism)
-            .withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-        case other => throw new IllegalStateException(s"refine over $other")
-      }
-      case IvfPq(_, _, nb) =>
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-          .drop(VEC)
-      // fp16 rows encode with no fitted state at all — the quantizer is
-      // the same for every corpus
-      case SqFlat(16) =>
-        base.withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC))).drop(VEC)
-      case IvfSq(_, 16) =>
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC)))
-          .drop(VEC)
-      // SQ8/SQ4 rows added after fit encode under the EXISTING bounds;
-      // values outside the trained range clamp to the edge levels (faiss
-      // SQ semantics — refit if the distribution moved)
-      case SqFlat(nb) =>
-        val (mn, df) = sqBounds.get
-        base.withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-          .drop(VEC)
-      case IvfSq(_, nb) =>
-        val (mn, df) = sqBounds.get
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-          .drop(VEC)
-      // segment-style growth (the Lucene per-segment-HNSW shape): appended
-      // rows get FRESH graphs under gpart ids past the existing ones —
-      // built graphs are immutable, search fans out over old + new alike
-      case HnswGraph(m) =>
-        // max(__gpart)+1 via the model's cached lazy val — a model that
-        // already resolved its graph count (effectiveEf, describe, a
-        // previous search) pays no job here
-        val offset = hnswGraphCount
-        val numGraphs = math.max(1, if (params.hnswGraphs > 0) params.hnswGraphs
-          else spark.sparkContext.defaultParallelism)
-        NswGraph.buildGraphs(base, VEC, ROW_ID, m,
-          SparkSearcher.resolveEfConstruction(params.efConstruction, m), numGraphs,
-          params.measurement, params.metricArg, gpartOffset = offset)
-    }
+    // cells, buckets and codes under the EXISTING quantizers; HNSW rows get
+    // fresh segment graphs past the existing ones — max(__gpart)+1 via the
+    // cached lazy val, so a model that already resolved its graph count
+    // pays no job here. SQ rows outside the trained range clamp to the edge
+    // levels (faiss SQ semantics — refit if the distribution moved)
+    val newPart = fitted.encode(base, searcher, hnswGraphCount)
     // Break the lineage BEFORE dropping the parent cache (r19).
     // Mechanism (pinned by graft.ProbeCacheDep + graft.ProbeUnionCache):
     // unions over LIVE caches substitute InMemoryTableScans fine, but
@@ -1642,81 +1278,17 @@ class SearcherModel private[search] (
     // RDD directly, nothing to invalidate — and the parent cache can be
     // dropped with nothing depending on it: the CacheDiscipline pattern
     // applied to the incremental-index hand-off.
-    // the row count — and, for HNSW, the fitted/segment split the growth
-    // policy below needs — ride the eager checkpoint's own
-    // materialization job via observe (r22; the Dedup ckptSigTracked
-    // pattern): localCheckpoint(true) already scans every row, so the
-    // old follow-up count() (and the policy's filter-count) were one and
-    // two whole extra jobs per add
-    val unioned = searcher.strategy match {
-      case HnswGraph(_) => indexed.unionByName(newPart).observe("__addmeta",
-        org.apache.spark.sql.functions.count(lit(1)).as("__n"),
-        coalesce(sum(when(col(NswGraph.GPART) < lit(fittedGraphTarget), 1L)
-          .otherwise(0L)), lit(0L)).as("__fitted"))
-      case _ => indexed.unionByName(newPart).observe("__addmeta",
-        org.apache.spark.sql.functions.count(lit(1)).as("__n"))
-    }
+    // the row count — and the family's growth counters (HNSW: the
+    // fitted/segment split its growth policy needs) — ride the eager
+    // checkpoint's own materialization job via observe (r22; the Dedup
+    // ckptSigTracked pattern): localCheckpoint(true) already scans every
+    // row, so a follow-up count() would be a whole extra job per add
+    val unioned = indexed.unionByName(newPart).observe("__addmeta",
+      org.apache.spark.sql.functions.count(lit(1)).as("__n"),
+      fitted.core.growthCounters(this): _*)
     val combined = unioned.localCheckpoint(true)
     val addMeta = unioned.queryExecution.observedMetrics("__addmeta")
-    val n = addMeta.getLong(0)
-    indexed.unpersist()
-    // a previous add/remove/compact left checkpoint-backed blocks the
-    // plain unpersist cannot release (they are LogicalRDD leaves, not
-    // cache-manager entries) — drop those too; the old model is consumed
-    graft.util.CacheDiscipline.release(indexed)
-    markConsumed("add")
-    val grown = new SearcherModel(searcher, combined, payloadCols, n, dim,
-      centroids, lshPlanes, pqCodebooks, sqBounds, opqRotation, pcaModel,
-      fittedGraphs)
-    // segment-growth policy (r19 warning, r20 merge policy): repeated
-    // HNSW add() accumulates fresh segment graphs, and per-graph beam
-    // economics degrade as the segment share grows (every graph is
-    // searched at the full beam, so cost scales with graph COUNT while
-    // each appended graph holds only its slice). One bounded agg over
-    // the cached union measures the split against the FITTED layout
-    // (persisted, not re-derived from this cluster's parallelism):
-    // - autoCompactAtSegmentRatio > 0 and tripped → compact() inline
-    //   (the opt-in Lucene-merge-policy shape; the returned model is
-    //   already in the fitted layout)
-    // - otherwise, once segment rows exceed the fitted corpus the
-    //   guidance is logged: compact() (one graph rebuild) restores it.
-    searcher.strategy match {
-      case HnswGraph(_) =>
-        val g0 = fittedGraphTarget
-        // observed on the checkpoint job above — no second scan
-        val fittedRows = addMeta.getLong(1)
-        val segRows = n - fittedRows
-        val ratio = params.autoCompactAtSegmentRatio
-        val log = org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher")
-        if (ratio > 0 && fittedRows > 0 && segRows >= ratio * fittedRows) {
-          log.info(s"HNSW add: segment rows $segRows / fitted $fittedRows " +
-            f"reached autoCompactAtSegmentRatio=$ratio%.2f — compacting " +
-            s"into the fitted $g0-graph layout")
-          // the RECEIVER is already consumed and its blocks released by
-          // this point; if the full-graph rebuild dies (executor loss/OOM)
-          // the caller must still get a usable model — return the grown
-          // segmented one (still live: compact() consumes it only after
-          // its rebuild materializes) instead of propagating and leaking
-          // its checkpoint blocks (r21, ADVICE)
-          return (try grown.compact() catch {
-            case scala.util.control.NonFatal(e) =>
-              log.warn("HNSW add: in-add compact failed — returning the " +
-                "grown segmented model; call compact() again when the " +
-                s"cluster recovers (${e.getMessage})", e)
-              grown
-          })
-        }
-        if (segRows > fittedRows)
-          log.warn(
-            s"HNSW add: segment graphs now hold $segRows rows vs " +
-              s"$fittedRows fitted — growth exceeded the fitted corpus; " +
-              "per-graph beam economics degrade from here (each graph is " +
-              "searched at the full beam). Call compact() to rebuild into " +
-              s"the fitted $g0-graph layout (or opt in to " +
-              "autoCompactAtSegmentRatio), or refit.")
-      case _ => ()
-    }
-    grown
+    fitted.core.afterAdd(regrown("add", combined, addMeta.getLong(0)), addMeta)
   }
 
   /**
@@ -1736,22 +1308,18 @@ class SearcherModel private[search] (
    * CONSUMED (see [[add]]); the no-op tiers leave it live.
    */
   def compact(): SearcherModel = {
-    // consumed-receiver check BEFORE the strategy dispatch (r21, ADVICE):
-    // the no-op tiers (non-HNSW, never-grown HNSW) return `this` — on a
-    // consumed model that would silently hand the dead receiver back and
-    // the caller only discovers the staleness on a later search
+    // consumed-receiver check BEFORE the no-op tiers (r21, ADVICE): they
+    // return `this` — on a consumed model that would silently hand the
+    // dead receiver back and the caller only discovers the staleness on a
+    // later search
     requireLive()
-    searcher.strategy match {
-    case HnswGraph(m) =>
-      val numGraphs = fittedGraphTarget
-      if (hnswGraphCount <= numGraphs) this
-      else {
-        val base = indexed.drop(NswGraph.GPART, NswGraph.NBRS)
+    fitted.core match {
+      case hnsw: FittedIndex.Hnsw if hnswGraphCount > fittedGraphTarget =>
+        val numGraphs = fittedGraphTarget
         // eager checkpoint before releasing the parent cache — same
         // dependent-cache invalidation hazard as add() (see there)
-        val rebuiltObs = NswGraph.buildGraphs(base, VEC, ROW_ID, m,
-          SparkSearcher.resolveEfConstruction(params.efConstruction, m),
-          numGraphs, params.measurement, params.metricArg, gpartOffset = 0)
+        val rebuiltObs = hnsw.build(indexed.drop(NswGraph.GPART, NswGraph.NBRS),
+          searcher, numGraphs, offset = 0)
           .observe("__compactmeta",
             org.apache.spark.sql.functions.count(lit(1)).as("__n"))
         val rebuilt = rebuiltObs.localCheckpoint(true)
@@ -1760,13 +1328,8 @@ class SearcherModel private[search] (
           .getLong(0)
         org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
           s"HNSW compact: $hnswGraphCount graphs -> $numGraphs, $n2 rows")
-        indexed.unpersist()
-        graft.util.CacheDiscipline.release(indexed)
-        markConsumed("compact")
-        new SearcherModel(searcher, rebuilt, payloadCols, n2, dim, centroids,
-          lshPlanes, pqCodebooks, sqBounds, opqRotation, pcaModel, fittedGraphs)
-      }
-    case _ => this
+        regrown("compact", rebuilt, n2)
+      case _ => this
     }
   }
 
@@ -1784,13 +1347,11 @@ class SearcherModel private[search] (
     // graph nodes invalidates the adjacency their neighbors route through
     // (and the anti-join would scatter graph co-location). Mirror faiss:
     // reject, refit (or filter results downstream) instead
-    searcher.strategy match {
-      case HnswGraph(_) => throw new UnsupportedOperationException(
+    if (fitted.core.isInstanceOf[FittedIndex.Hnsw])
+      throw new UnsupportedOperationException(
         "remove() is not supported on HNSW graph indexes (faiss raises " +
           "'remove_ids not implemented' for IndexHNSW as well) — refit " +
           "without the rows, or anti-join the search results")
-      case _ => ()
-    }
     // eager checkpoint before releasing the parent cache — same
     // dependent-cache invalidation hazard as add() (see there)
     val combinedObs = indexed
@@ -1799,12 +1360,8 @@ class SearcherModel private[search] (
         org.apache.spark.sql.functions.count(lit(1)).as("__n"))
     val combined = combinedObs.localCheckpoint(true)
     // rides the eager checkpoint's own job (r22) — no follow-up count
-    val n = combinedObs.queryExecution.observedMetrics("__removemeta").getLong(0)
-    indexed.unpersist()
-    graft.util.CacheDiscipline.release(indexed)
-    markConsumed("remove")
-    new SearcherModel(searcher, combined, payloadCols, n, dim, centroids,
-      lshPlanes, pqCodebooks, sqBounds, opqRotation, pcaModel, fittedGraphs)
+    regrown("remove", combined,
+      combinedObs.queryExecution.observedMetrics("__removemeta").getLong(0))
   }
 
   /**
@@ -1818,94 +1375,21 @@ class SearcherModel private[search] (
       queryIdCol: Option[String] = None): DataFrame = {
     requireLive()
     require(count > 0, "search before fit (faiss_searcher.py:187)")
-    // fp16 ranges over its reconstruction (faiss SQ range_search does the
-    // same): codes decode in the scoring projection, below
-    val fp16Codes = !indexed.columns.contains(VEC) &&
-      (IndexStrategy.effective(searcher.strategy) match {
-        case SqFlat(16) | IvfSq(_, 16) => true
-        case _                         => false
-      })
-    require(indexed.columns.contains(VEC) || fp16Codes,
-      "range search needs stored vectors (Flat/IVF/LSH) or decodable fp16 " +
-        "codes (PQ/SQ8/SQ4 keep lossy byte codes only)")
-    val scanBase =
-      if (fp16Codes) indexed.withColumn(VEC, Fp16.decodeCol(col(PqIndex.CODES)))
-      else indexed
     val qItemCol = params.itemCol
       .filter(queries.columns.contains).getOrElse(queries.columns.head)
     val withId = queryIdCol match {
       case Some(c) => queries.withColumn(QID, col(c))
       case None    => zipWithRowId(queries, QID)
     }
-    // same pipeline order as fit/search: normVec normalize → PCA project
-    // → codes-cos normalize (fp16 is the one code family that ranges —
-    // its cos fit normalized the corpus AND trained the IVF centroids on
-    // unit vectors, so the probing query must be normalized the same way;
-    // cos itself is scale-invariant, so threshold semantics are unchanged)
-    val encoded0 = searcher.encoder.encode(withId, qItemCol, QVEC)
-    val encodedNv =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else encoded0
-    val encoded = pcaProject(encodedNv, QVEC)
-    val q = encoded.select(col(QID), col(qItemCol).as(SourceItem), col(QVEC))
-    val qn =
-      if (fp16Codes && params.measurement == "cos")
-        q.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else q
+    // same pipeline order as fit/search: normVec normalize → PCA project;
+    // fp16 codes range over their reconstruction (faiss SQ range_search
+    // does the same), and PQ/SQ8/SQ4 byte codes cannot range at all — the
+    // family's range pairs decide both
+    val q = toIndexSpace(searcher.encoder.encode(withId, qItemCol, QVEC), QVEC)
+      .select(col(QID), col(qItemCol).as(SourceItem), col(QVEC))
     val dist = metric.dist(col(QVEC), col(VEC))
     val keep = if (metric.higherIsCloser) dist >= threshold else dist <= threshold
-    // IVF models prune: each query scans only its nprobe cells (a row
-    // lives in exactly one cell, so hits stay distinct); full probe ≡ the
-    // exact scan (spec-gated). Other strategies scan exactly.
-    val scored = searcher.strategy match {
-      case IvfFlat(_) | IvfSq(_, 16) =>
-        val cents = centroids.getOrElse(
-          throw new IllegalStateException("IVF search without fitted centroids"))
-        // clamp against the FITTED cell count, not the parsed nlist — an
-        // auto-sized model (`IVF0`) parses as nlist=0, but cents.length is
-        // always the real cell count (fit clamps to the train-sample size
-        // too, so the parsed number can overstate the cells that exist)
-        val probes = qn.withColumn(IvfIndex.CID,
-          explode(IvfIndex.nearestCentroidsCol(col(QVEC), cents,
-            IndexStrategy.resolveNprobe(searcher.effectiveNprobe, cents.length))))
-        scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            col(IvfIndex.CID) +: payloadCols.map(col)): _*)
-          .join(probes, IvfIndex.CID)
-      // degenerate-config reroute (see dispatchTopK): a range scan has
-      // the same candidate economics, and the exact branch below returns
-      // a SUPERSET of any bucket-pruned result at lower estimated cost
-      case LshTables(_, _) if lshServeExact =>
-        lshRouteLog(routed = true)
-        scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            payloadCols.map(col)): _*)
-          .crossJoin(broadcast(qn))
-      case LshTables(_, _) =>
-        if (lshServeExactCheaper) lshRouteLog(routed = false)
-        // bucket-collision candidates then threshold verify — approximate
-        // with LSH's usual recall semantics (a true hit that collides in
-        // no table is missed), same contract as the LSH top-k path
-        val planes = lshPlanes.getOrElse(
-          throw new IllegalStateException("LSH search without fitted planes"))
-        val probes = qn.select(col(QID), col(QVEC), col(SourceItem),
-          posexplode(SignLsh.bucketsCol(col(QVEC), planes)).as(Seq("__tbl", "__bkt")))
-        val slimB = scanBase.select(col(ROW_ID),
-          posexplode(col(BUCKETS)).as(Seq("__tbl", "__bkt")))
-        // skinny (qid, row_id) pairs shuffle FIRST; the wide sides join
-        // on after (index by row_id, broadcast queries last) — same
-        // candidate-volume discipline as lshTopK
-        probes.select(col(QID), col("__tbl"), col("__bkt"))
-          .join(slimB, Seq("__tbl", "__bkt"))
-          .select(col(QID), col(ROW_ID)).distinct()
-          .join(scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            payloadCols.map(col)): _*), ROW_ID)
-          .join(broadcast(qn), QID)
-      case _ =>
-        scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            payloadCols.map(col)): _*)
-          .crossJoin(broadcast(qn))
-    }
-    scored
+    fitted.rangePairs(this, q)
       .filter(keep)
       .select((col(QID).as(queryIdCol.getOrElse("query_id")) +:
         sepSplit(col(SourceItem), params.queryFeatureSep).as(SourceItem) +:
@@ -1936,23 +1420,10 @@ class SearcherModel private[search] (
       case None    => zipWithRowId(queries, QID)
     }
     // same pipeline order as fit: normVec normalize → PCA project →
-    // pqCos (materialized) normalize in the projected space
-    val encoded0 = searcher.encoder.encode(withId, qItemCol, QVEC)
-    val encodedNv =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else encoded0
-    val encoded = pcaProject(encodedNv, QVEC)
-    val q = encoded.select(col(QID), col(qItemCol).as(SourceItem), col(QVEC))
-    val pqCos = IndexStrategy.codesOnly(searcher.strategy) && params.measurement == "cos"
-    val qn =
-      if (pqCos)
-        // PQ + cos: queries must be materialized-normalized like the fitted
-        // codes (ADC computes raw dot tables; see fit)
-        q.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else q
-
-    val hits = dispatchTopK(searcher.strategy, qn, topK)
+    // codes-cos (materialized) normalize in the projected space
+    val q = toIndexSpace(searcher.encoder.encode(withId, qItemCol, QVEC), QVEC)
+      .select(col(QID), col(qItemCol).as(SourceItem), col(QVEC))
+    val hits = fitted.topK(this, normalizedIf(q, QVEC, searcher.codesCos), topK)
 
     // payload gather-join (the reference's iloc, faiss_searcher.py:146-147).
     // The broadcast decision is row-count AND byte guarded: the row
@@ -2022,72 +1493,6 @@ class SearcherModel private[search] (
     }
   }
 
-  /** Strategy-dispatched top-k hits `(QID, SourceItem, ROW_ID, DIST,
-    * RANK)` — shared by [[search]] and the refine stage (which runs its
-    * INNER strategy at a widened k). */
-  private def dispatchTopK(s: IndexStrategy, qn: DataFrame, topK: Int): DataFrame = s match {
-    case ExactFlat      => exactTopK(qn, topK)
-    case IvfFlat(_)     => IvfIndex.ivfTopK(this, qn, topK, searcher.effectiveNprobe)
-    case HnswGraph(_)   =>
-      NswGraph.topK(indexed, qn, topK, effectiveEf, metric.name, params.metricArg)
-        .join(broadcast(qn.select(col(QID), col(SourceItem))), QID)
-        .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-    // cost-based access-path check runs on EVERY LSH serve (the config
-    // may be degenerate — the 64-table feasibility ceiling); the reroute
-    // is automatic for joint-auto spellings (no bucket obligation) and
-    // opt-in for explicit ones, where faiss semantics say the index you
-    // built is the index that serves (the hash gates pin bucket results)
-    case LshTables(_, _) if lshServeExact =>
-      lshRouteLog(routed = true); exactTopK(qn, topK)
-    case LshTables(_, _) =>
-      if (lshServeExactCheaper) lshRouteLog(routed = false)
-      lshTopK(qn, topK)
-    case PqFlat(_, _)   => pqTopK(qn, topK)
-    // queries rotate into the fitted basis, then ordinary ADC — the
-    // stored codes already live in rotated space
-    case OpqPq(_)       => pqTopK(qn.withColumn(QVEC,
-      OpqIndex.rotateCol(col(QVEC), opqRotation.getOrElse(
-        throw new IllegalStateException("OPQ search without fitted rotation")))), topK)
-    case IvfPq(_, _, _) => ivfPqTopK(qn, topK)
-    // fp16 codes don't fit the byte-indexed ADC tables: decode inside
-    // the scoring projection (codegen, fused with the distance kernel)
-    // and run the exact top-k machinery over the reconstruction
-    case SqFlat(16)     => fp16TopK(qn, topK)
-    case IvfSq(_, 16)   => ivfFp16TopK(qn, topK)
-    // SQ8/SQ4 codes score through the same ADC machinery: the fitted
-    // pqCodebooks ARE the dim×256 dequantization levels (SqIndex.levels)
-    case SqFlat(_)      => pqTopK(qn, topK)
-    case IvfSq(_, _)    => ivfPqTopK(qn, topK)
-    // faiss IndexRefineFlat (the `…,RFlat` factory suffix): the inner
-    // code-based index proposes topK·kFactor candidates cheaply, the kept
-    // float vectors re-score them EXACTLY, top-k of the exact scores wins.
-    // Candidate misses are the only recall loss left — quantization error
-    // no longer reorders the final ranking
-    case Refined(inner) =>
-      // refineKFactor = 0 (default) scales the pool with the corpus
-      // (quadruple per decade, the measured ladder — resolveRefineKFactor);
-      // an explicit value passes through, with a warning when it is a
-      // small fixed pool at the scale where the measured decay is
-      // material (RECALL.md: x4 reads 0.470 @ 200k, 0.347 @ 2M)
-      val kFactor = SparkSearcher.resolveRefineKFactor(params.refineKFactor, count)
-      val rlog = org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher")
-      if (params.refineKFactor <= 0)
-        rlog.info(s"RFlat auto pool: $count rows -> kFactor=$kFactor")
-      else if (params.refineKFactor <= 4 && count >= 100000L)
-        rlog.warn(s"RFlat refine pinned at x$kFactor over $count rows: a " +
-          "fixed pool's recall decays with corpus growth (RECALL.md: x4 " +
-          "reads 0.470 @ 200k, 0.347 @ 2M) — set refineKFactor=0 (auto) " +
-          "or raise it, or serve IVF-auto/HNSW")
-      val cand = dispatchTopK(inner, qn, topK * kFactor)
-      val exact = cand.select(col(QID), col(ROW_ID))
-        .join(indexed.select(col(ROW_ID), col(VEC)), ROW_ID)
-        .join(broadcast(qn.select(col(QID), col(QVEC))), QID)
-        .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-      TopKAggregate.mergeHits(exact, topK, ascending = !metric.higherIsCloser)
-        .join(broadcast(qn.select(col(QID), col(SourceItem))), QID)
-        .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
-
   /** Multi-K on the RAW path (faiss_searcher.py:170-183: the raw branch
     * slices the aligned matrices per k — `labels[:, :k]`, line 181): ONE
     * [[searchRaw]] at `max(ks)`, each smaller k derived by truncating the
@@ -2134,7 +1539,7 @@ class SearcherModel private[search] (
       .get("graft.search.payloadBroadcastByteCap",
         SparkSearcher.WindowBroadcastByteCap.toString).toLong
 
-  private def exactTopK(q: DataFrame, topK: Int): DataFrame =
+  private[search] def exactTopK(q: DataFrame, topK: Int): DataFrame =
     params.exactPath match {
       case "window" if SparkSearcher.windowPathFits(count, dim,
           params.broadcastThreshold, windowByteCap) =>
@@ -2156,117 +1561,24 @@ class SearcherModel private[search] (
       .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
   }
 
-  private[search] def exactTopKAggregate(q: DataFrame, topK: Int): DataFrame = {
-    val slim = indexed.select(col(ROW_ID), col(VEC))
+  /** Bounded-heap exact top-k over `slim` `(row_id, __vec)` — the stored
+    * floats, or a reconstruction decoded inside the scoring projection
+    * (fp16: one codegen span with the distance kernel). */
+  private[search] def exactTopKAggregate(q: DataFrame, topK: Int,
+      slim: => DataFrame = indexed.select(col(ROW_ID), col(VEC))): DataFrame = {
     val scored = slim
       .crossJoin(broadcast(q.select(col(QID), col(QVEC))))
       .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
+    withSource(TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser), q)
   }
 
-  /** LSH candidate search: queries explode into their per-table bucket
-    * keys, equi-join against the stored index buckets (only colliding rows
-    * are ever scored), exact re-rank of the distinct candidates. Fully
-    * deterministic given the fitted planes — oracle-checkable despite
-    * being approximate. May return < topK rows for a query with few
-    * collisions (faiss's LSH behaves the same). */
-  private def lshTopK(q: DataFrame, topK: Int): DataFrame = {
-    val planes = lshPlanes.getOrElse(
-      throw new IllegalStateException("LSH search without fitted planes"))
-    val probes = q.select(col(QID), col(QVEC),
-      posexplode(graft.search.SignLsh.bucketsCol(col(QVEC), planes))
-        .as(Seq("__tbl", "__bkt")))
-    val slimB = indexed.select(col(ROW_ID),
-      posexplode(col(BUCKETS)).as(Seq("__tbl", "__bkt")))
-    val cands = probes.select(col(QID), col("__tbl"), col("__bkt"))
-      .join(slimB, Seq("__tbl", "__bkt"))
-      .select(col(QID), col(ROW_ID)).distinct()
-    // JOIN ORDER IS THE SCALE STORY HERE: the candidate set is
-    // |Q| × occupancy × tables rows (the r16 sf100 probe measured 506M
-    // DISTINCT candidates at |Q|=500 under the joint-auto 44×6-bit
-    // config), so the row_id shuffle must carry the SKINNY (qid, row_id)
-    // pairs only. The earlier shape attached the ~300-byte query vector
-    // BEFORE that shuffle — 160 GB in flight at |Q|=500 (ENOSPC,
-    // BENCH_r16_sf100_knnbatch2 first attempt) vs ~4 GB at the 10-query
-    // gates where it hid. Vectors join on AFTER the shuffle: the index
-    // side by row_id, the broadcast-able query side last.
-    val scored = cands
-      .join(indexed.select(col(ROW_ID), col(VEC)), ROW_ID)
-      .join(broadcast(q.select(col(QID), col(QVEC))), QID)
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    // bounded-heap top-k tail (same as the exact aggregate path): shuffles
-    // k rows per query per partition instead of sorting all candidates
-    TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
+  /** Index rows `(row_id, __item, vec, extra…, payload…)` for a range scan. */
+  private[search] def scanRows(vec: Column, extra: Column*): DataFrame =
+    indexed.select(((col(ROW_ID) +: col(ITEM) +: vec +: extra) ++ payloadCols.map(col)): _*)
 
-  /** PQ ADC search: delegate to [[PqIndex.pqTopK]] (per-partition distance
-    * tables over byte codes), then attach source items like the other
-    * paths. Approximate; deterministic given the seeded codebooks. */
-  private def pqTopK(q: DataFrame, topK: Int): DataFrame = {
-    val cbs = pqCodebooks.getOrElse(
-      throw new IllegalStateException("PQ search without fitted codebooks"))
-    PqIndex.pqTopK(indexed, q, topK, cbs, metric.name, searcher.params.metricArg,
-        nbits = pqNbits)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
-
-  /** Code width of the PQ stream this model scores: 4 only for the
-    * `PQmx4` family — OPQ's codes and the SQ byte-level reuse are 8-bit
-    * streams (SQ4's nibbles pair into byte-level tables at the levels
-    * layer, so its code STREAM is byte-granular too). */
-  private def pqNbits: Int = IndexStrategy.effective(searcher.strategy) match {
-    case PqFlat(_, nb)   => nb
-    case IvfPq(_, _, nb) => nb
-    case _               => 8
-  }
-
-  /** SQfp16 search: exact scoring over the half-precision reconstruction.
-    * The stored 2-byte codes decode INSIDE the scoring projection (one
-    * whole-stage-codegen span with the distance kernel — the float corpus
-    * is never materialized; codes are what's cached), then the shared
-    * bounded-heap top-k tail. Same plan as [[exactTopKAggregate]] at half
-    * the cached bytes. */
-  private def fp16TopK(q: DataFrame, topK: Int): DataFrame = {
-    val slim = indexed.select(col(ROW_ID),
-      Fp16.decodeCol(col(PqIndex.CODES)).as(VEC))
-    val scored = slim
-      .crossJoin(broadcast(q.select(col(QID), col(QVEC))))
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
-
-  /** IVFn,SQfp16: centroid-pruned cells, fp16 decode-and-score within the
-    * probed cells — [[IvfIndex.ivfTopKOver]] with the reconstruction as
-    * the vector view. */
-  private def ivfFp16TopK(q: DataFrame, topK: Int): DataFrame = {
-    val cents = centroids.getOrElse(
-      throw new IllegalStateException("IVF,SQfp16 search without fitted centroids"))
-    IvfIndex.ivfTopKOver(
-      indexed.select(col(ROW_ID), Fp16.decodeCol(col(PqIndex.CODES)).as(VEC),
-        col(IvfIndex.CID)),
-      metric, cents, q, topK, searcher.effectiveNprobe)
-  }
-
-  /** IVF+PQ: cell-pruned ADC — see [[IvfPqScorer.topK]]. */
-  // no nlist parameter: IvfPqScorer derives the cell count from the
-  // fitted centroids (auto-sized IVF0 models parse as nlist=0)
-  private def ivfPqTopK(q: DataFrame, topK: Int): DataFrame = {
-    val cbs = pqCodebooks.getOrElse(
-      throw new IllegalStateException("IVF,PQ search without fitted codebooks"))
-    val cents = centroids.getOrElse(
-      throw new IllegalStateException("IVF,PQ search without fitted centroids"))
-    IvfPqScorer.topK(indexed, q, topK, cbs, cents, params.nprobe,
-        metric.name, searcher.params.metricArg, nbits = pqNbits)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
+  /** fit's pipeline up to the index space: normVec normalize → PCA project. */
+  private def toIndexSpace(df: DataFrame, c: String): DataFrame =
+    fitted.project(normalizedIf(df, c, searcher.normVecFirst), c)
 
   /** Convenience overload mirroring the reference's `List[str]` query input
     * (faiss_searcher.py:161: `target: List[str]`): items become a one-column
@@ -2309,71 +1621,11 @@ class SearcherModel private[search] (
   def save(path: String): Unit = {
     requireLive()
     val itemsOut = indexed.withColumnRenamed(ITEM, ITEM_SAVED)
-    IndexStrategy.effective(searcher.strategy) match {
-      // IVF-family indexes persist PARTITIONED BY CELL: on disk the cells
-      // are directories, so any cell-filtered read of a saved 100 TB index
-      // prunes at the storage layer (PartitionFilters) and touches only
-      // the probed nprobe/nlist fraction — the at-rest analog of the
-      // in-memory repartition(cell) co-location
-      case IvfFlat(_) | IvfPq(_, _, _) | IvfSq(_, _) =>
-        itemsOut.write.mode("overwrite").partitionBy(IvfIndex.CID)
-          .parquet(s"$path/items")
-      // HNSW persists partitioned by GRAPH: each graph's rows live in one
-      // directory, so load can re-co-locate a graph with one shuffle and a
-      // partial read touches whole graphs, never fragments of one
-      case HnswGraph(_) =>
-        itemsOut.write.mode("overwrite").partitionBy(NswGraph.GPART)
-          .parquet(s"$path/items")
-      case _ =>
-        itemsOut.write.mode("overwrite").parquet(s"$path/items")
-    }
-    // metadata tables are a few KB–MB of fitted constants: write each as
-    // ONE file (r22) — a local Seq toDF otherwise parallelizes to the
-    // shuffle-partition count, paying ~32 write tasks and leaving ~32
-    // near-empty files for every later load to open
-    centroids.foreach { cs =>
-      val sp = spark
-      import sp.implicits._
-      cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("centroid_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    }
-    lshPlanes.foreach { ps =>
-      val sp = spark
-      import sp.implicits._
-      (for (t <- ps.indices; b <- ps(t).indices)
-        yield (t, b, ps(t)(b).toSeq)).toDF("tbl", "bit", "plane")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/lsh_planes")
-    }
-    opqRotation.foreach { rot =>
-      val sp = spark
-      import sp.implicits._
-      rot.indices.map(j => (j, rot(j).toSeq)).toDF("j", "row")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/opq_rotation")
-    }
-    // PCA-prefix kernel + bias (n_components re-asserted at load)
-    pcaModel.foreach(_.save(spark, s"$path/pca"))
-    // SQ persists its BOUNDS (2·dim floats), not the derived dim×256
-    // levels — load rebuilds levels from bounds, and add() after load
-    // encodes under the exact fitted bounds (no float drift)
-    IndexStrategy.effective(searcher.strategy) match {
-      // fp16 is train-free: no bounds to persist, codes self-describe
-      case SqFlat(16) | IvfSq(_, 16) => ()
-      case SqFlat(_) | IvfSq(_, _) =>
-        val (mn, df) = sqBounds.get
-        val sp = spark
-        import sp.implicits._
-        mn.indices.map(i => (i, mn(i), df(i))).toDF("i", "vmin", "vdiff")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/sq_bounds")
-      case _ =>
-        pqCodebooks.foreach { cbs =>
-          val sp = spark
-          import sp.implicits._
-          (for (m <- cbs.indices; c <- cbs(m).indices)
-            yield (m, c, cbs(m)(c).toSeq)).toDF("sub", "cid", "centroid")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebooks")
-        }
-    }
+    // co-located families persist PARTITIONED BY their layout column (IVF
+    // cell, HNSW graph) — the at-rest analog of the in-memory co-location
+    val writer = itemsOut.write.mode("overwrite")
+    fitted.layoutCol.fold(writer)(c => writer.partitionBy(c)).parquet(s"$path/items")
+    fitted.save(spark, path)
     // params as a 1-row JSON with every search-relevant knob persisted
     // (nprobe/exactPath/broadcastThreshold included: a reloaded IVF model
     // must keep its recall setting). Option fields use an empty-string
@@ -2415,7 +1667,10 @@ class SearcherModel private[search] (
     // add()'s segment baseline, persisted so the layout contract survives
     // load onto a cluster whose parallelism differs from the fitting one
     // (0 sentinel = non-HNSW / pre-r20)
-    node.put("fittedGraphs", fittedGraphs.map(_.toLong).getOrElse(0L))
+    node.put("fittedGraphs", fitted.core match {
+      case FittedIndex.Hnsw(_, graphs) => graphs.getOrElse(0)
+      case _                           => 0
+    })
     // serving-format version (r19): marks saves written since the
     // joint-auto LSH degenerate reroute landed. Loads of models WITHOUT
     // it that the reroute now serves through the exact kernel log an
@@ -2429,15 +1684,23 @@ class SearcherModel private[search] (
     node.put("itemsSchema", itemsOut.schema.json)
     val dir = new org.apache.hadoop.fs.Path(s"$path/params.json")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // overwrite semantics like the old writer's mode("overwrite"): a
-    // previous save's part files (possibly differently named) must not
-    // survive next to the new row
-    fs.delete(dir, true)
+    // create before delete: the new row lands under a hidden temp name
+    // (readers skip `.`-files), THEN every earlier part goes — a previous
+    // save's parts (possibly differently named) must not survive next to
+    // the new row — THEN the temp is renamed into place. A crash before
+    // the rename leaves the previous row loadable. An older writer's
+    // plain params.json FILE is replaced outright.
+    if (fs.exists(dir) && !fs.getFileStatus(dir).isDirectory) fs.delete(dir, false)
     fs.mkdirs(dir)
-    val part = fs.create(
-      new org.apache.hadoop.fs.Path(dir, "part-00000-graft.json"), true)
-    try part.write((mapper.writeValueAsString(node) + "\n").getBytes("UTF-8"))
-    finally part.close()
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".part-${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write((mapper.writeValueAsString(node) + "\n").getBytes("UTF-8"))
+    finally out.close()
+    fs.listStatus(dir).map(_.getPath).filter(_.getName != tmp.getName)
+      .foreach(fs.delete(_, true))
+    val part = new org.apache.hadoop.fs.Path(dir, "part-00000-graft.json")
+    if (!fs.rename(tmp, part))
+      throw new java.io.IOException(s"index save: could not rename $tmp to $part")
     fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
   }
 

@@ -31,10 +31,11 @@ object Parallelism {
     * QueryExecution) rather than `.rdd`, which additionally builds the
     * external-row conversion lineage on every access. One physical
     * planning of `df` still happens if it wasn't planned yet; the count
-    * is the PRE-AQE one (AQE may coalesce at runtime), so callers must
-    * only use it where over-counting is the safe error — deciding a
-    * parallelism FLOOR qualifies: a plan AQE would coalesce below the
-    * floor is exactly one that needs spreading. No job is run.
+    * is the PRE-AQE one (AQE may coalesce at runtime), so it can
+    * over-count. For a parallelism FLOOR that means under-firing: a plan
+    * that reads at or above the floor here but that AQE later coalesces
+    * below it is not spread. That is acceptable: AQE coalesces only
+    * tiny partitions, where a spread would not pay. No job is run.
     */
   def planPartitions(df: DataFrame): Int =
     df.queryExecution.toRdd.getNumPartitions
@@ -65,7 +66,12 @@ object Parallelism {
     */
   def streamStatePartitions(spark: SparkSession, src: String): Int = {
     val explicit = spark.conf.get("spark.graft.stream.statePartitions", "")
-    if (explicit.nonEmpty) return explicit.toInt
+    if (explicit.nonEmpty) {
+      val n = explicit.trim.toIntOption
+      require(n.exists(_ >= 1), "spark.graft.stream.statePartitions must be " +
+        s"an integer >= 1, got '$explicit'")
+      return n.get
+    }
     val p = new org.apache.hadoop.fs.Path(src)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength

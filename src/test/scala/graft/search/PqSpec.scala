@@ -90,7 +90,7 @@ class PqSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").cast("long").as(SparkSearcher.QID),
         col("embedding").cast("array<float>").as(SparkSearcher.QVEC))
-    val cbs = model.pqCodebooks.get
+    val FittedIndex.Flat(FittedIndex.Pq(cbs, _)) = model.fitted
     def run(chunk: Int) = PqIndex
       .pqTopK(model.indexed, q, 5, cbs, metricName = "l2", queryChunkSize = chunk)
       .collect().map(_.toSeq).toSet
@@ -98,8 +98,9 @@ class PqSpec extends SparkSpec {
     val ivfpq = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "l2", indexParam = "IVF8,PQ8", nprobe = 4)).fit(emb)
+    val FittedIndex.Ivf(ivfCents, FittedIndex.Pq(ivfCbs, _)) = ivfpq.fitted
     def runIvf(chunk: Int) = IvfPqScorer
-      .topK(ivfpq.indexed, q, 5, ivfpq.pqCodebooks.get, ivfpq.centroids.get,
+      .topK(ivfpq.indexed, q, 5, ivfCbs, ivfCents,
         nprobe = 4, metricName = "l2", queryChunkSize = chunk)
       .collect().map(_.toSeq).toSet
     assert(runIvf(7) === runIvf(Int.MaxValue))
@@ -297,7 +298,7 @@ class PqSpec extends SparkSpec {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "OPQ8,PQ8")).fit(emb)
     // fitted rotation is orthonormal: R·Rᵀ ≈ I (float storage ⇒ 1e-5 tol)
-    val rot = opq.fittedOpqRotation.get
+    val FittedIndex.Opq(rot, _) = opq.fitted
     val d = rot.length
     for (a <- 0 until d; b <- a until d) {
       val dot = (0 until d).map(i => rot(a)(i).toDouble * rot(b)(i)).sum
@@ -501,7 +502,8 @@ class PqSpec extends SparkSpec {
       .select(octet_length(col(PqIndex.CODES)).as("len")).distinct().collect()
     assert(lens.map(_.getInt(0)).toSeq === Seq(4))
     // 16-centroid codebooks, every stored code < 16 per nibble
-    assert(model.fittedCodebooks.get.forall(_.length <= 16))
+    val FittedIndex.Flat(FittedIndex.Pq(cbs, _)) = model.fitted
+    assert(cbs.forall(_.length <= 16))
     // coarser quantization still self-retrieves in the top ranks and
     // keeps meaningful recall vs exact
     val pq = model.search(q, 10, keepRankNo = true, queryIdCol = Some("vec_id"))

@@ -9,6 +9,9 @@ import org.apache.spark.sql.functions._
   * reference runtime asserts (SURVEY §5). */
 class SearcherSpec extends SparkSpec {
 
+  private def cells(m: SearcherModel) = { val FittedIndex.Ivf(c, _) = m.fitted; c }
+  private def planes(m: SearcherModel) = { val FittedIndex.Lsh(p) = m.fitted; p }
+
   private def embModel(measurement: String = "cos") =
     new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
@@ -180,6 +183,34 @@ class SearcherSpec extends SparkSpec {
     intercept[IllegalArgumentException](SparkSearcher.load(spark, dir2))
   }
 
+  test("load rejects a params.json directory holding two params rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-2rows").toString
+    embModel().save(dir)
+    val pdir = java.nio.file.Paths.get(s"$dir/params.json")
+    val part = pdir.resolve("part-00000-graft.json")
+    // a second writer's part file next to the first: which row would win
+    // is an accident of listing order, so the load must refuse both
+    java.nio.file.Files.copy(part, pdir.resolve("part-00001-other.json"))
+    val e = intercept[IllegalArgumentException](SparkSearcher.load(spark, dir))
+    assert(e.getMessage.contains("exactly one params row"))
+    assert(e.getMessage.contains("found 2"))
+  }
+
+  test("saving twice to one path leaves exactly one params part file, and the index loads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-resave").toString
+    val model = embModel()
+    model.save(dir)
+    model.save(dir)
+    val names = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/params.json"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    assert(names.count(_.startsWith("part-")) === 1, names.mkString(", "))
+    assert(names.contains("_SUCCESS"))
+    assert(!names.exists(_.endsWith(".tmp")), names.mkString(", "))
+    val loaded = SparkSearcher.load(spark, dir)
+    assert(loaded.count === model.count)
+    loaded.unpersist()
+  }
+
   test("load tolerates params.json from an older writer (missing fields -> defaults)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-oldidx").toString
     val model = embModel()
@@ -210,7 +241,7 @@ class SearcherSpec extends SparkSpec {
     assert(loaded.searcher.params.efConstruction === dflt.efConstruction)
     assert(loaded.searcher.params.autoCompactAtSegmentRatio ===
       dflt.autoCompactAtSegmentRatio)
-    assert(loaded.fittedGraphs === None)
+    assert(loaded.fitted === FittedIndex.Flat(FittedIndex.Floats))
     val res = loaded.search(sf("embeddings").filter(col("vec_id") < 2),
       topK = 2, keepRankNo = true, queryIdCol = Some("vec_id"))
     assert(res.count() === 4)
@@ -229,7 +260,7 @@ class SearcherSpec extends SparkSpec {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         indexParam = "IVF0", nprobe = 1 << 20)).fit(emb)
     val expected = IndexStrategy.resolveNlist(0, n)
-    assert(model.centroids.get.length === math.min(expected.toLong, n).toInt)
+    assert(cells(model).length === math.min(expected.toLong, n).toInt)
     val q = emb.filter(col("vec_id") < 3)
     // nprobe >= cells -> every cell probed -> exact: must equal Flat's result
     val exact = embModel().search(q, topK = 5, keepRankNo = true,
@@ -242,7 +273,7 @@ class SearcherSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf0").toString
     model.save(dir)
     val loaded = SparkSearcher.load(spark, dir)
-    assert(loaded.centroids.get.length === model.centroids.get.length)
+    assert(cells(loaded).length === cells(model).length)
     val again = loaded.search(q, topK = 5, keepRankNo = true,
       queryIdCol = Some("vec_id")).orderBy("vec_id", "rank_no").collect()
     assert(again === exact)
@@ -287,7 +318,7 @@ class SearcherSpec extends SparkSpec {
       measurement = "cos", indexParam = "IVF0")
     val auto = new SparkSearcher(new PassthroughEncoder("embedding"),
       params.copy(nprobe = 0)).fit(emb)
-    val resolved = IndexStrategy.resolveNprobe(0, auto.centroids.get.length)
+    val resolved = IndexStrategy.resolveNprobe(0, cells(auto).length)
     val pinned = new SparkSearcher(new PassthroughEncoder("embedding"),
       params.copy(nprobe = resolved)).fit(emb)
     val q = emb.filter(col("vec_id") < 5)
@@ -340,8 +371,8 @@ class SearcherSpec extends SparkSpec {
     assert(loaded.searcher.params.lshBatchHint === 500)
     // loaded planes identical — the hint changed only the fit-time pick
     assert(java.util.Arrays.deepEquals(
-      loaded.fittedLshPlanes.get.asInstanceOf[Array[AnyRef]],
-      m.fittedLshPlanes.get.asInstanceOf[Array[AnyRef]]))
+      planes(loaded).asInstanceOf[Array[AnyRef]],
+      planes(m).asInstanceOf[Array[AnyRef]]))
     m.unpersist(); loaded.unpersist()
   }
 
@@ -542,7 +573,7 @@ class SearcherSpec extends SparkSpec {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "cos", indexParam = "LSH12")).fit(emb)
     // fitted planes reflect the resolved width: numTables x bits x dim
-    val planes = model.fittedLshPlanes.get
+    val planes = this.planes(model)
     assert(planes.length === 12)
     assert(planes.head.length === IndexStrategy.resolveBits(None, n))
     // candidates-only search still returns ranked hits with self at rank 0

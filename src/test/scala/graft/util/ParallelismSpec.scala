@@ -51,4 +51,17 @@ class ParallelismSpec extends SparkSpec {
     try assert(Parallelism.streamStatePartitions(spark, dir) == 13)
     finally spark.conf.unset("spark.graft.stream.statePartitions")
   }
+
+  test("streamStatePartitions rejects an override that is not an integer >= 1, naming the key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spart-bad").toString
+    spark.range(10).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
+    for (bad <- Seq("abc", "0", "-3")) {
+      spark.conf.set("spark.graft.stream.statePartitions", bad)
+      try {
+        val e = intercept[IllegalArgumentException](Parallelism.streamStatePartitions(spark, dir))
+        assert(e.getMessage.contains("spark.graft.stream.statePartitions"), bad)
+        assert(e.getMessage.contains(s"'$bad'"), bad)
+      } finally spark.conf.unset("spark.graft.stream.statePartitions")
+    }
+  }
 }
